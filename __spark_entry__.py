@@ -479,9 +479,9 @@ def q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same point-in-time semantics as ``asof_join`` but through the
     salted two-phase carry path (north_star centerpiece); the oracle is
     the plain ASOF JOIN — salting must be invisible. Default engine:
-    ``asof_join_salted_jvm`` (union trick + chunk carry, zero Python);
-    the Arrow merge_asof variant stays pytest-pinned to the same frames.
-    Full input scope — no rescoping; the JVM path costs ~the plain join."""
+    ``asof_join_salted_jvm`` (union trick + chunk carry, zero Python),
+    pytest-pinned frame-for-frame to the unsalted join. Full input
+    scope — no rescoping; the JVM path costs ~the plain join."""
     ev = _t(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     views = (
@@ -5396,10 +5396,19 @@ def _drain_two_drops(
 
 
 def _is_agg(stream_df) -> bool:
-    """True when the streaming plan is a plain aggregation (needs
-    complete/update output mode; the stateful applyInPandasWithState
-    twins run append)."""
-    return "Aggregate" in stream_df._jdf.queryExecution().analyzed().toString()
+    """True when the streaming plan aggregates STREAMING rows (needs
+    complete/update output mode): some Aggregate node sits over a
+    streaming subtree. An Aggregate on the static side of a stream-static
+    join does not count, and the stateful applyInPandasWithState twins
+    run append."""
+
+    def walk(node) -> bool:
+        if node.nodeName() == "Aggregate" and node.isStreaming():
+            return True
+        kids = node.children()
+        return any(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(stream_df._jdf.queryExecution().analyzed())
 
 
 def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5989,7 +5998,9 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dimension intervalized batch-side
     (``intervalize_dimension``: one lead window → half-open validity
     ranges), joined stream-static with ZERO state (intervals partition
-    the timeline, so no aggregation, no watermark). Oracle: DuckDB ASOF
+    the timeline, so no aggregation, no watermark). The purchases are
+    pre-aggregated to one row per (user, ts) with max(value), the unique
+    (by, ts) that ``intervalize_dimension`` requires. Oracle: DuckDB ASOF
     LEFT JOIN — inclusive backward, rows before the first purchase keep
     NULL payload."""
     from acoustic_feature_extractor_spark.streaming.enrich import (
@@ -5999,9 +6010,9 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     dim = intervalize_dimension(
-        ev.where(F.col("event_type") == "purchase").select(
-            "user_id", "ts", F.col("value").alias("dvalue")
-        ),
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("dvalue")),
         on="ts",
         by="user_id",
     )
@@ -6029,7 +6040,8 @@ WITH spine AS (
   SELECT user_id, event_id, ts FROM events WHERE event_type IN ('click', 'view')
 ),
 dim AS (
-  SELECT user_id, ts, value AS dvalue FROM events WHERE event_type = 'purchase'
+  SELECT user_id, ts, max(value) AS dvalue FROM events
+  WHERE event_type = 'purchase' GROUP BY user_id, ts
 )
 SELECT s.user_id, s.event_id,
        round(d.dvalue, 6) AS dvalue,
@@ -6128,10 +6140,13 @@ def q_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    ev.where(_sec("ts") < cut).write.parquet(src)
+    # NULL-safe split (as in _drain_two_drops): a row whose predicate is
+    # NULL must still land in exactly one drop
+    first = F.coalesce(_sec("ts") < cut, F.lit(False))
+    ev.where(first).write.parquet(src)
     drain()
     n1 = len(snap.history(tbl))
-    ev.where(~(_sec("ts") < cut)).write.mode("append").parquet(src)
+    ev.where(~first).write.mode("append").parquet(src)
     drain()
     n2 = len(snap.history(tbl))
     drain()  # restart with nothing new: exactly-once means zero commits

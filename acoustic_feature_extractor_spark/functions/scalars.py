@@ -96,52 +96,6 @@ def sec_to_ntz(sec: Column) -> Column:
     )
 
 
-def masked_log(col: Column, valid: Column | None = None) -> Column:
-    """log on valid entries, 0 stays 0 (``f0.py:61-65`` log-f0 with vuv mask)."""
-    cond = valid if valid is not None else (col != 0)
-    return F.when(cond, F.log(col)).otherwise(F.lit(0.0))
-
-
-def clip(col: Column, lo: float, hi: float) -> Column:
-    """numpy.clip (``extract_wave.py:35``, ``spectrogram.py:45``)."""
-    return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-
-
-def power_to_db(
-    col: Column,
-    ref: float = 1.0,
-    amin: float = 1e-10,
-    top_db: float | None = None,
-    max_db: Column | None = None,
-) -> Column:
-    """librosa.power_to_db semantics (``extract_volume.py:32-38``):
-    10·log10(max(amin, x)) − 10·log10(ref); with ``top_db`` set, floored at
-    ``max_db − top_db`` where ``max_db`` is the caller-computed per-group
-    max (a window/agg column — computing it here would hide a global
-    shuffle inside a scalar function)."""
-    db = 10.0 * F.log10(F.greatest(col, F.lit(amin))) - F.lit(10.0) * F.log10(F.lit(max(amin, ref)))
-    if top_db is None:
-        return db
-    assert max_db is not None, "top_db flooring needs the per-group max_db column"
-    return F.greatest(db, max_db - F.lit(float(top_db)))
-
-
-def db_to_amplitude(db: Column | float) -> Column:
-    """10^(db/20) (``extract_wave.py:31``)."""
-    c = db if isinstance(db, Column) else F.lit(float(db))
-    return F.pow(F.lit(10.0), c / 20.0)
-
-
-def normalize_01(col: Column, lo: Column, hi: Column) -> Column:
-    """clip-normalize to [0,1] (``extract_volume.py:36-38``, ``spectrogram.py:46-48``)."""
-    return clip((col - lo) / (hi - lo), 0.0, 1.0)
-
-
-def onehot(label: Column, vocabulary: list[str]) -> Column:
-    """Closed-vocabulary one-hot as array<int> (``phoneme.py:44-48``)."""
-    return F.array(*[(label == F.lit(v)).cast("int") for v in vocabulary])
-
-
 def searchsorted(col: Column | str, bounds: list) -> Column:
     """Number of ``bounds`` values ≤ ``col`` (numpy.searchsorted side
     'right' over a SORTED literal boundary list), as a balanced tree of
@@ -191,12 +145,3 @@ def searchsorted(col: Column | str, bounds: list) -> Column:
         )
 
     return rec(0, len(bounds))
-
-
-def index_to_seconds(idx: Column, rate: float) -> Column:
-    """frame index → seconds (``linguistic_feature.py:71-75``)."""
-    return idx.cast("double") / F.lit(float(rate))
-
-
-def seconds_to_index(t: Column, rate: float) -> Column:
-    return F.round(t.cast("double") * F.lit(float(rate))).cast("long")

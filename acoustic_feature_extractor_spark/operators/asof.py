@@ -5,28 +5,31 @@ Reference parity targets:
   (``/root/reference/src/acoustic_feature_extractor/data/sampling_data.py:29-51``):
   each target-grid index takes the source row at
   ``floor(i * src_rate / dst_rate)`` — i.e. the latest source sample at or
-  before the target timestamp. ``kind="linear"`` interpolates between the
-  bracketing source samples (scipy.interp1d semantics with edge clamp).
+  before the target timestamp. :func:`resample_grid` with
+  ``kind="linear"`` interpolates between the bracketing source samples
+  (scipy.interp1d semantics with edge clamp).
 - multi-source alignment (``SamplingData.collect``,
   ``sampling_data.py:87-139``): resample every source to a common rate,
   tolerance-check lengths, align min/max/first, concatenate feature axes.
 
-Two physical strategies, same semantics:
+One kernel and one oracle:
 
-1. ``asof_join`` — the SCALE PATH. Pure Catalyst "union trick": tag both
-   sides, union on (key, ts), one window forward-fill of the right-side
-   payload, filter back to left rows. Entirely JVM-side (whole-stage
-   codegen), ONE shuffle of (left+right) on the key, no Python, and —
-   unlike a cogrouped pandas kernel — AQE can split skewed partitions
-   because the window key can be salted (see skew.py). Zero temporal
-   leakage by construction: the fill window is rowsBetween(unboundedPreceding, 0)
-   over orderBy(ts, side) with the right side sorting first at equal ts,
-   so a left row can only ever see right rows with ts <= its own.
-
-2. ``asof_join_cogroup`` — Arrow-batched ``pd.merge_asof`` per cogrouped
-   key (the north_star's "sorted-merge within salted, range-partitioned
-   (conv_id, ts) partitions via Arrow-batched pandas UDFs"). Used for the
-   interpolating variant and as an independent oracle for the union trick.
+- The kernel is the pure-Catalyst "union trick" (:func:`_tagged_union`,
+  one window fill, :func:`_gated_output`): tag both sides, union on
+  (key, ts) with every right row packed into one struct, forward-fill
+  that struct with one window, filter back to the left rows. Entirely
+  JVM-side (whole-stage codegen), ONE shuffle of (left+right) on the
+  key, no Python. Zero temporal leakage by construction: the backward
+  fill frame is rowsBetween(unboundedPreceding, 0) over orderBy(ts, side)
+  with the right side sorting first at equal ts, so a left row can only
+  ever see right rows with ts <= its own. Three operators run it:
+  :func:`asof_join` (backward / forward / nearest),
+  :func:`asof_join_salted_jvm` (the fill inside time chunks plus a chunk
+  carry, so no task owns a whole mega-entity) and
+  :func:`point_in_time_enrich` (K sources filled by one window).
+- The oracle is :func:`asof_join_cogroup`: Arrow-batched
+  ``pd.merge_asof`` per cogrouped key — independent code the tests pin
+  the kernel against, not a scale path.
 """
 
 from __future__ import annotations
@@ -34,11 +37,110 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.functions.scalars import epoch_sec_fn
 from pyspark.sql.window import Window
+
+
+def _key_cols(
+    right: DataFrame, on: str, by: str | list[str], right_cols: Iterable[str] | None
+) -> tuple[list[str], list[str]]:
+    """(by columns, right payload columns); the payload defaults to every
+    right column that is neither a key nor ``on``."""
+    by_cols = [by] if isinstance(by, str) else list(by)
+    if right_cols is None:
+        right_cols = [c for c in right.columns if c not in by_cols and c != on]
+    return by_cols, list(right_cols)
+
+
+def _tagged_union(
+    left: DataFrame,
+    rights: list[tuple[DataFrame, list[str]]],
+    on: str,
+    by_cols: list[str],
+) -> DataFrame:
+    """Tag-union ``left`` with every right side on (by, on).
+
+    Left rows keep their columns and get ``_side`` 1. Right side ``i``
+    contributes its rows with non-null ``on`` (a null-ts row can never
+    match), ``_side`` 0 and null left payload, its whole payload row
+    packed into ONE struct ``_r{i}`` (``_rts`` = its ``on``, then the
+    payload columns); every other struct is null. As-of semantics are
+    "latest right ROW", so the fill must move rows, not columns:
+    per-column last(ignorenulls) would skip a legitimately-null payload
+    value and stitch together fields from different right rows.
+    """
+    left_cols = left.columns
+    types = [
+        "struct<"
+        + ",".join(
+            [f"_rts:{r.schema[on].dataType.simpleString()}"]
+            + [f"{c}:{r.schema[c].dataType.simpleString()}" for c in cols]
+        )
+        + ">"
+        for r, cols in rights
+    ]
+    u = left.select(
+        *left_cols,
+        F.lit(1).alias("_side"),
+        *[F.lit(None).cast(t).alias(f"_r{i}") for i, t in enumerate(types)],
+    )
+    null_left = [
+        F.lit(None).cast(left.schema[c].dataType).alias(c)
+        for c in left_cols
+        if c not in by_cols and c != on
+    ]
+    for i, (r, cols) in enumerate(rights):
+        row = F.struct(F.col(on).alias("_rts"), *[F.col(c).alias(c) for c in cols])
+        rt = r.where(F.col(on).isNotNull()).select(
+            *by_cols,
+            F.col(on),
+            F.lit(0).alias("_side"),
+            *null_left,
+            *[
+                (row if j == i else F.lit(None).cast(t)).alias(f"_r{j}")
+                for j, t in enumerate(types)
+            ],
+        )
+        u = u.unionByName(rt)
+    return u
+
+
+def _gap_ok(
+    sec, on: str, row: str, tolerance_seconds: float | None, forward: bool = False
+) -> Column | None:
+    """The match in struct column ``row`` lies within ``tolerance_seconds``
+    of the left row's ``on`` (None when there is no tolerance). ``sec``
+    is the union's epoch-seconds conversion."""
+    if tolerance_seconds is None:
+        return None
+    lts, rts = sec(F.col(on)), sec(F.col(f"{row}._rts"))
+    return ((rts - lts) if forward else (lts - rts)) <= F.lit(tolerance_seconds)
+
+
+def _gated_output(
+    filled: DataFrame,
+    left_cols: list[str],
+    on: str,
+    picks: list[tuple[str, list[str], str, Column | None]],
+) -> DataFrame:
+    """The left rows of a filled union: every left column plus, per
+    ``(row, payload, suffix, keep)`` pick, ``{c}{suffix}`` for each
+    payload column and ``{on}{suffix}`` for the matched timestamp, read
+    from struct column ``row`` and nulled where ``keep`` is not true
+    (``keep=None`` keeps every match)."""
+    outs = []
+    for row, payload, suffix, keep in picks:
+        for name, field in [*[(c, c) for c in payload], (on, "_rts")]:
+            v = F.col(f"{row}.{field}")
+            outs.append((f"{name}{suffix}", v if keep is None else F.when(keep, v)))
+    return (
+        filled.where(F.col("_side") == 1)
+        .withColumns(dict(outs))
+        .select(*left_cols, *[n for n, _ in outs])
+    )
 
 
 def asof_join(
@@ -79,102 +181,60 @@ def asof_join(
         return _nearest_strict(
             left, right, on, by, right_cols, suffix, tolerance_seconds
         )
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
-
+    by_cols, right_cols = _key_cols(right, on, by, right_cols)
     left_cols = left.columns
-    # Tag and union. Left keeps its payload; the right side contributes
-    # ONE struct packing its whole payload row — as-of semantics are
-    # "latest right ROW", so the fill must move rows, not columns:
-    # per-column last(ignorenulls) would skip a legitimately-null payload
-    # value and stitch together fields from different right rows.
-    row_struct = F.struct(
-        F.col(on).alias("_rts"), *[F.col(c).alias(c) for c in right_cols]
-    )
-    # single join over all parts so an empty right_cols (right side carrying
-    # only by/on columns) yields valid DDL with no trailing comma
-    struct_parts = [f"_rts:{right.schema[on].dataType.simpleString()}"] + [
-        f"{c}:{right.schema[c].dataType.simpleString()}" for c in right_cols
-    ]
-    lt = left.withColumn("_side", F.lit(1)).withColumn(
-        "_r_row", F.lit(None).cast("struct<" + ",".join(struct_parts) + ">")
-    )
-    rt = right.where(F.col(on).isNotNull()).select(
-        *by_cols,
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in by_cols and c != on],
-        row_struct.alias("_r_row"),
-    )
-    u = lt.select(*left_cols, "_side", "_r_row").unionByName(
-        rt.select(*left_cols, "_side", "_r_row")
-    )
-
+    u = _tagged_union(left, [(right, right_cols)], on, by_cols)
     _sec = epoch_sec_fn(u, on)  # tz-independent; dtype-dispatched
-    lts = _sec(F.col(on))
+    w = Window.partitionBy(*by_cols)
+
     if direction == "nearest":
         # one sort serves both frames: right (_side=0) first at equal ts,
         # so the backward frame sees distance-0 matches and wins the tie
-        w_base = Window.partitionBy(*by_cols).orderBy(F.col(on).asc(), F.col("_side").asc())
-        wb = w_base.rowsBetween(Window.unboundedPreceding, 0)
-        wf = w_base.rowsBetween(0, Window.unboundedFollowing)
-        filled = u.withColumn(
-            "_b_row", F.last("_r_row", ignorenulls=True).over(wb)
-        ).withColumn("_f_row", F.first("_r_row", ignorenulls=True).over(wf))
-        out = filled.where(F.col("_side") == 1)
-        tol = F.lit(tolerance_seconds) if tolerance_seconds is not None else None
-        db = lts - _sec(F.col("_b_row._rts"))
-        df_ = _sec(F.col("_f_row._rts")) - lts
-        b_ok = F.col("_b_row").isNotNull() & (db <= tol if tol is not None else F.lit(True))
-        f_ok = F.col("_f_row").isNotNull() & (df_ <= tol if tol is not None else F.lit(True))
+        w = w.orderBy(F.col(on).asc(), F.col("_side").asc())
+        filled = u.withColumns(
+            {
+                "_b": F.last("_r0", ignorenulls=True).over(
+                    w.rowsBetween(Window.unboundedPreceding, 0)
+                ),
+                "_f": F.first("_r0", ignorenulls=True).over(
+                    w.rowsBetween(0, Window.unboundedFollowing)
+                ),
+            }
+        )
+        lts = _sec(F.col(on))
+        db = lts - _sec(F.col("_b._rts"))
+        df_ = _sec(F.col("_f._rts")) - lts
+        b_ok, f_ok = F.col("_b").isNotNull(), F.col("_f").isNotNull()
+        if tolerance_seconds is not None:
+            b_ok = b_ok & (db <= F.lit(tolerance_seconds))
+            f_ok = f_ok & (df_ <= F.lit(tolerance_seconds))
         use_b = b_ok & (~f_ok | (db <= df_))
-        pick = F.when(use_b, F.col("_b_row")).when(f_ok, F.col("_f_row"))
-        out = out.withColumn("_p_row", pick)
-        for c in right_cols:
-            out = out.withColumn(f"{c}{suffix}", F.col(f"_p_row.{c}"))
-        out = out.withColumn(f"{on}{suffix}", F.col("_p_row._rts"))
-        return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
+        filled = filled.withColumn(
+            "_p", F.when(use_b, F.col("_b")).when(f_ok, F.col("_f"))
+        )
+        return _gated_output(filled, left_cols, on, [("_p", right_cols, suffix, None)])
 
-    if direction == "backward":
-        # At equal ts the right row must be visible to the left row (<=),
-        # so right (_side=0) sorts first; strict mode flips the order.
-        side_order = F.col("_side").asc() if allow_exact_matches else F.col("_side").desc()
-        w = (
-            Window.partitionBy(*by_cols)
-            .orderBy(F.col(on).asc(), side_order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        fill = F.last("_r_row", ignorenulls=True).over(w)
-        dist = lambda: lts - _sec(F.col("_f_row._rts"))  # noqa: E731
-    else:  # forward
-        # mirror: the frame FOLLOWS the row, so at equal ts the right row
-        # must sort at-or-after the left row to be visible (<= semantics)
-        side_order = F.col("_side").desc() if allow_exact_matches else F.col("_side").asc()
-        w = (
-            Window.partitionBy(*by_cols)
-            .orderBy(F.col(on).asc(), side_order)
-            .rowsBetween(0, Window.unboundedFollowing)
-        )
-        fill = F.first("_r_row", ignorenulls=True).over(w)
-        dist = lambda: _sec(F.col("_f_row._rts")) - lts  # noqa: E731
-    filled = u.withColumn("_f_row", fill)
-
-    out = filled.where(F.col("_side") == 1)
-    keep = (
-        dist() <= F.lit(tolerance_seconds)
-        if tolerance_seconds is not None
-        else F.lit(True)
+    forward = direction == "forward"
+    # At equal ts the right row must be visible to the left row under <=
+    # semantics: the backward frame PRECEDES the row, so right (_side=0)
+    # sorts first; the forward frame FOLLOWS it, so right sorts after.
+    # Strict mode flips both.
+    right_first = allow_exact_matches != forward
+    w = w.orderBy(
+        F.col(on).asc(), F.col("_side").asc() if right_first else F.col("_side").desc()
     )
-    for c in right_cols:
-        out = out.withColumn(
-            f"{c}{suffix}", F.when(keep, F.col(f"_f_row.{c}")).otherwise(F.lit(None))
+    if forward:
+        fill = F.first("_r0", ignorenulls=True).over(
+            w.rowsBetween(0, Window.unboundedFollowing)
         )
-    out = out.withColumn(
-        f"{on}{suffix}", F.when(keep, F.col("_f_row._rts")).otherwise(F.lit(None))
+    else:
+        fill = F.last("_r0", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        )
+    keep = _gap_ok(_sec, on, "_f", tolerance_seconds, forward)
+    return _gated_output(
+        u.withColumn("_f", fill), left_cols, on, [("_f", right_cols, suffix, keep)]
     )
-    return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
 
 
 def _nearest_strict(
@@ -188,10 +248,7 @@ def _nearest_strict(
 ) -> DataFrame:
     """Strict (no exact matches) nearest as-of: chain the two strict
     single-direction passes, keep the closer candidate (ties -> backward)."""
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
+    _, right_cols = _key_cols(right, on, by, right_cols)
     left_cols = left.columns
     b = asof_join(
         left, right, on, by, right_cols, "_xb", tolerance_seconds, False, "backward"
@@ -222,220 +279,40 @@ def asof_join_cogroup(
     by: str = "conv_id",
     right_cols: Iterable[str] | None = None,
     suffix: str = "_asof",
-    kind: str = "nearest",  # "nearest" (backward) | "linear"
 ) -> DataFrame:
-    """Arrow-batched sorted-merge as-of join (``pd.merge_asof`` per key).
+    """The as-of ORACLE: Arrow-batched ``pd.merge_asof`` (backward,
+    inclusive) per cogrouped key.
 
-    ``kind="linear"`` interpolates numeric right columns between the
-    bracketing right rows (edge-clamped), matching the reference's
-    ``kind="linear"`` resample (``sampling_data.py:43-50`` via
-    scipy.interp1d with fill_value=(first, last)).
+    Independent of the union-trick kernel — pandas does the matching — so
+    tests pin :func:`asof_join` against it. Not a scale path: one whole
+    entity lands in one pandas group.
     """
     if right_cols is None:
         right_cols = [c for c in right.columns if c != by and c != on]
     right_cols = list(right_cols)
     left_fields = left.schema.fields
-    out_schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields]
-    for c in right_cols:
-        dt = "double" if kind == "linear" else right.schema[c].dataType.simpleString()
-        out_schema_parts.append(f"`{c}{suffix}` {dt}")
-    out_schema = ", ".join(out_schema_parts)
-    left_names = [f.name for f in left_fields]
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields]
+        + [f"`{c}{suffix}` {right.schema[c].dataType.simpleString()}" for c in right_cols]
+    )
+    out_cols = [f.name for f in left_fields] + [f"{c}{suffix}" for c in right_cols]
 
     def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         lpdf = lpdf.sort_values(on, kind="mergesort")
         if rpdf.empty:
             for c in right_cols:
                 lpdf[f"{c}{suffix}"] = None
-            return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
+            return lpdf[out_cols]
         rpdf = rpdf.sort_values(on, kind="mergesort")
-        if kind == "linear":
-            import numpy as np
+        merged = pd.merge_asof(
+            lpdf,
+            rpdf[[on] + right_cols].rename(columns={c: f"{c}{suffix}" for c in right_cols}),
+            on=on,
+            direction="backward",
+        )
+        return merged[out_cols]
 
-            lx = lpdf[on].astype("int64").to_numpy()
-            rx = rpdf[on].astype("int64").to_numpy()
-            for c in right_cols:
-                ry = rpdf[c].astype("float64").to_numpy()
-                lpdf[f"{c}{suffix}"] = np.interp(lx, rx, ry)
-        else:
-            merged = pd.merge_asof(
-                lpdf,
-                rpdf[[on] + right_cols].rename(columns={c: f"{c}{suffix}" for c in right_cols}),
-                on=on,
-                direction="backward",
-            )
-            merged.index = lpdf.index
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = merged[f"{c}{suffix}"]
-        return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(lambda li, ri: merge(li, ri), schema=out_schema)
-    )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    right_cols: Iterable[str] | None = None,
-    suffix: str = "_asof",
-    chunk_seconds: float = 3600.0,
-) -> DataFrame:
-    """Salted, range-partitioned Arrow sorted-merge as-of join.
-
-    The north_star centerpiece verbatim: "an as-of/point-in-time join
-    implemented as a sorted-merge within salted, range-partitioned
-    (conv_id, ts) partitions via Arrow-batched pandas UDFs". A plain
-    cogroup (``asof_join_cogroup``) puts one whole entity in one task —
-    a mega-conversation starves it. Here each entity is salted into
-    time-range chunks of ``chunk_seconds`` and the merge runs per
-    (entity, chunk):
-
-    1. both sides get ``_chunk = floor(ts / chunk_seconds)``;
-    2. right-side per-(entity, chunk) LAST row is reduced to a tiny
-       summary; a window over chunks forward-fills "latest right state at
-       each chunk start" (two-phase partial/final hand-off);
-    3. that carry row is injected into the next chunk's right group, so a
-       chunk-local ``pd.merge_asof`` sees the true predecessor across the
-       salt boundary — results are exactly the unsalted join (tests pin
-       frame-for-frame equality);
-    4. cogrouped ``applyInPandas`` on (entity, chunk) does the merge.
-
-    Zero temporal leakage is preserved: carry rows only ever move state
-    FORWARD in time (a chunk receives the latest right row with
-    ``ts < chunk_start``), never backward.
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c != by and c != on]
-    right_cols = list(right_cols)
-
-    # fresh attribute ids for the right side: callers routinely derive both
-    # sides from ONE table (two filters of the same events scan), and
-    # shared expression ids make every internal self-join/cogroup ambiguous
-    right = right.select(*[F.col(c).alias(c) for c in right.columns])
-
-    sec = epoch_sec_fn(left, on)(F.col(on))  # tz-independent
-    chunk = F.floor(sec / F.lit(chunk_seconds)).cast("long")
-    lt = left.withColumn("_chunk", chunk)
-    # a null-ts right row can never be a backward match — drop before it
-    # can become a chunk's "last" row / carry
-    rt = (
-        right.select(by, on, *right_cols)
-        .where(F.col(on).isNotNull())
-        .withColumn("_chunk", chunk)
-    )
-
-    # 2) per-(entity, chunk) last right row -> forward-filled carry table
-    w_rank = Window.partitionBy(by, "_chunk").orderBy(F.col(on).desc())
-    last_in_chunk = (
-        rt.withColumn("_rn", F.row_number().over(w_rank))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # chunks that exist on the LEFT need a carry even when the right side
-    # has no rows in the previous chunk: build the chunk spine from both
-    left_chunks = lt.select(by, "_chunk").distinct()
-    right_chunks = rt.select(by, "_chunk").distinct()
-    # renamed spine keys: left/right often share lineage (two filters of
-    # one table), and a same-attribute join would be ambiguous
-    spine = (
-        left_chunks.unionByName(right_chunks)
-        .distinct()
-        .select(F.col(by).alias("_sp_by"), F.col("_chunk").alias("_sp_chunk"))
-    )
-    # The carry is the last right ROW as one unit: forward-filling columns
-    # independently with ignorenulls would skip a legitimately-null payload
-    # and stitch together fields from DIFFERENT right rows — results would
-    # then depend on chunk_seconds for nullable payloads. Pack the row into
-    # a struct (null only for right-empty chunks) and fill the struct.
-    lic = last_in_chunk.select(
-        F.col(by).alias("_lc_by"),
-        F.col("_chunk").alias("_lc_chunk"),
-        F.struct(*[F.col(c).alias(c) for c in [on] + right_cols]).alias("_lc_row"),
-    )
-    carry_src = spine.join(
-        lic,
-        (F.col("_sp_by") == F.col("_lc_by"))
-        & (F.col("_sp_chunk") == F.col("_lc_chunk")),
-        "left",
-    ).select(
-        F.col("_sp_by").alias(by),
-        F.col("_sp_chunk").alias("_chunk"),
-        F.col("_lc_row"),
-    )
-    w_ff = (
-        Window.partitionBy(by)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = carry_src.select(
-        by,
-        "_chunk",
-        F.last("_lc_row", ignorenulls=True).over(w_ff).alias("_carry"),
-    ).where(F.col("_carry").isNotNull())
-
-    # 3) inject carry rows into the right side of their chunk
-    carry_rows = carry.select(
-        by,
-        "_chunk",
-        F.col(f"_carry.{on}").alias(on),
-        *[F.col(f"_carry.{c}").alias(c) for c in right_cols],
-    )
-    rt_aug = rt.unionByName(carry_rows)
-
-    left_fields = lt.schema.fields
-    out_schema_parts = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields if f.name != "_chunk"
-    ]
-    for c in right_cols:
-        out_schema_parts.append(f"`{c}{suffix}` {right.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(out_schema_parts)
-    left_names = [f.name for f in left_fields if f.name != "_chunk"]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        # null timestamps: merge_asof rejects null keys, but the pure-
-        # Catalyst asof_join tolerates them — match that: null-ts left rows
-        # pass through with null payloads, null-ts right rows are ignored
-        null_mask = lpdf[on].isna()
-        lnull = lpdf[null_mask]
-        lpdf = lpdf[~null_mask].sort_values(on, kind="mergesort")
-        rpdf = rpdf[rpdf[on].notna()]
-        out_cols = left_names + [f"{c}{suffix}" for c in right_cols]
-        if rpdf.empty:
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = None
-        else:
-            rpdf = (
-                rpdf.sort_values(on, kind="mergesort")
-                .drop_duplicates(subset=[on], keep="last")
-            )
-            merged = pd.merge_asof(
-                lpdf,
-                rpdf[[on] + right_cols].rename(
-                    columns={c: f"{c}{suffix}" for c in right_cols}
-                ),
-                on=on,
-                direction="backward",
-            )
-            merged.index = lpdf.index
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = merged[f"{c}{suffix}"]
-        if len(lnull):
-            lnull = lnull.copy()
-            for c in right_cols:
-                lnull[f"{c}{suffix}"] = None
-            lpdf = pd.concat([lpdf, lnull])
-        return lpdf[out_cols]
-
-    return (
-        lt.groupBy(by, "_chunk")
-        .cogroup(rt_aug.groupBy(by, "_chunk"))
-        .applyInPandas(lambda li, ri: merge(li, ri), schema=out_schema)
-    )
+    return left.groupBy(by).cogroup(right.groupBy(by)).applyInPandas(merge, schema=out_schema)
 
 
 def asof_join_salted_jvm(
@@ -452,15 +329,13 @@ def asof_join_salted_jvm(
     """Salted as-of join with ZERO Python — the union trick composed with
     the skew engine's two-phase carry (``skew.py`` pattern).
 
-    The Arrow path (:func:`asof_join_salted`) pays ~ms of pandas overhead
-    per (entity, chunk) group — at bench scale that was 23% of suite wall
-    time for semantics the union trick delivers in <1s. This variant keeps
-    the salting (mega-entities split into time chunks so no task owns a
-    whole conversation) while staying entirely inside whole-stage codegen:
+    Mega-entities are split into time chunks so no task owns a whole
+    conversation, while the plan stays entirely inside whole-stage
+    codegen:
 
-    1. tag + union both sides (as in :func:`asof_join`), right payload
-       packed into ONE struct so the fill moves rows, never stitches
-       columns from different right rows;
+    1. tag + union both sides (:func:`_tagged_union`, as in
+       :func:`asof_join`), right payload packed into ONE struct so the
+       fill moves rows, never stitches columns from different right rows;
     2. chunk on ``floor(ts / chunk_seconds)``; the fill window runs inside
        (key, chunk) — bounded partitions regardless of entity size;
     3. per-(key, chunk) final state = the fill value of the chunk's last
@@ -474,50 +349,28 @@ def asof_join_salted_jvm(
     Exactly the unsalted :func:`asof_join` frame-for-frame (tests pin it);
     zero temporal leakage: carries only ever move right state FORWARD.
     """
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
+    by_cols, right_cols = _key_cols(right, on, by, right_cols)
     left_cols = left.columns
-
-    struct_parts = [f"_rts:{right.schema[on].dataType.simpleString()}"] + [
-        f"{c}:{right.schema[c].dataType.simpleString()}" for c in right_cols
-    ]
-    row_struct = F.struct(
-        F.col(on).alias("_rts"), *[F.col(c).alias(c) for c in right_cols]
-    )
-    lt = left.withColumn("_side", F.lit(1)).withColumn(
-        "_r_row", F.lit(None).cast("struct<" + ",".join(struct_parts) + ">")
-    )
-    rt = right.where(F.col(on).isNotNull()).select(
-        *by_cols,
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left_cols
-            if c not in by_cols and c != on
-        ],
-        row_struct.alias("_r_row"),
-    )
-    u = lt.select(*left_cols, "_side", "_r_row").unionByName(
-        rt.select(*left_cols, "_side", "_r_row")
-    )
+    u = _tagged_union(left, [(right, right_cols)], on, by_cols)
 
     # sort key for "right visible to left at equal ts": right first under
     # <= semantics, left first under strict <; _sk is numeric so the same
     # order drives both the window and the chunk-last max_by
     sk = F.col("_side") if allow_exact_matches else -F.col("_side")
     _sec = epoch_sec_fn(u, on)  # tz-independent; dtype-dispatched
-    u = u.withColumn("_chunk", F.floor(_sec(F.col(on)) / F.lit(chunk_seconds)).cast("long"))
-    u = u.withColumn("_sk", sk)
+    u = u.withColumns(
+        {
+            "_chunk": F.floor(_sec(F.col(on)) / F.lit(chunk_seconds)).cast("long"),
+            "_sk": sk,
+        }
+    )
 
     w_local = (
         Window.partitionBy(*by_cols, "_chunk")
         .orderBy(F.col(on).asc(), F.col("_sk").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    u = u.withColumn("_local", F.last("_r_row", ignorenulls=True).over(w_local))
+    u = u.withColumn("_local", F.last("_r0", ignorenulls=True).over(w_local))
 
     # per-chunk final state: the _local of the chunk's LAST row in window
     # order (its running fill == the chunk's last non-null right row).
@@ -541,27 +394,10 @@ def asof_join_salted_jvm(
     for c in by_cols:
         cond = cond & (F.col(f"_cb_{c}") == F.col(c))
     filled = u.join(carry, cond, "left").withColumn(
-        "_f_row", F.coalesce(F.col("_local"), F.col("_carry"))
+        "_f", F.coalesce(F.col("_local"), F.col("_carry"))
     )
-
-    out = filled.where(F.col("_side") == 1)
-    keep = (
-        (
-            _sec(F.col(on))
-            - _sec(F.col("_f_row._rts"))
-        )
-        <= F.lit(tolerance_seconds)
-        if tolerance_seconds is not None
-        else F.lit(True)
-    )
-    for c in right_cols:
-        out = out.withColumn(
-            f"{c}{suffix}", F.when(keep, F.col(f"_f_row.{c}")).otherwise(F.lit(None))
-        )
-    out = out.withColumn(
-        f"{on}{suffix}", F.when(keep, F.col("_f_row._rts")).otherwise(F.lit(None))
-    )
-    return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
+    keep = _gap_ok(_sec, on, "_f", tolerance_seconds)
+    return _gated_output(filled, left_cols, on, [("_f", right_cols, suffix, keep)])
 
 
 def resample_grid(
@@ -838,63 +674,19 @@ def point_in_time_enrich(
     (``/root/reference/src/acoustic_feature_extractor/data/sampling_data.py:87-139``),
     spine-driven instead of grid-driven.
     """
-    by_cols = [by] if isinstance(by, str) else list(by)
     names = list(sources)
     if payload_cols is None:
-        payload_cols = {
-            n: [c for c in s.columns if c not in by_cols and c != on]
-            for n, s in sources.items()
-        }
+        payload_cols = {n: _key_cols(s, on, by, None)[1] for n, s in sources.items()}
     if not isinstance(tolerance_seconds, dict):
         tolerance_seconds = {n: tolerance_seconds for n in names}
+    by_cols = [by] if isinstance(by, str) else list(by)
     spine_cols = spine.columns
     for n in names:
         for c in payload_cols[n] + [on]:
             if f"{c}_{n}" in spine_cols:
                 raise ValueError(f"output column {c}_{n} collides with spine")
 
-    def struct_type(n: str) -> str:
-        s = sources[n]
-        parts = [f"_rts:{s.schema[on].dataType.simpleString()}"] + [
-            f"{c}:{s.schema[c].dataType.simpleString()}" for c in payload_cols[n]
-        ]
-        return "struct<" + ",".join(parts) + ">"
-
-    # spine rows: real payload, every source struct null
-    lt = spine.withColumn("_side", F.lit(1))
-    for n in names:
-        lt = lt.withColumn(f"_r_{n}", F.lit(None).cast(struct_type(n)))
-    sel = [*spine_cols, "_side", *[f"_r_{n}" for n in names]]
-    parts = [lt.select(*sel)]
-    # source rows: null spine payload, own struct packed, others null
-    for n in names:
-        s = sources[n].where(F.col(on).isNotNull())
-        row = s.select(
-            *by_cols,
-            F.col(on),
-            F.lit(0).alias("_side"),
-            *[
-                F.lit(None).cast(spine.schema[c].dataType).alias(c)
-                for c in spine_cols
-                if c not in by_cols and c != on
-            ],
-            *[
-                (
-                    F.struct(
-                        F.col(on).alias("_rts"),
-                        *[F.col(c).alias(c) for c in payload_cols[n]],
-                    )
-                    if m == n
-                    else F.lit(None).cast(struct_type(m))
-                ).alias(f"_r_{m}")
-                for m in names
-            ],
-        )
-        parts.append(row.select(*sel))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-
+    u = _tagged_union(spine, [(sources[n], payload_cols[n]) for n in names], on, by_cols)
     # equal-ts rule identical to asof_join: sources first (visible) for
     # inclusive semantics, spine first for strict <
     side_order = F.col("_side").asc() if allow_exact_matches else F.col("_side").desc()
@@ -903,27 +695,13 @@ def point_in_time_enrich(
         .orderBy(F.col(on).asc(), side_order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    filled = u
-    for n in names:
-        # same window spec for every source -> ONE Window physical node
-        filled = filled.withColumn(
-            f"_f_{n}", F.last(f"_r_{n}", ignorenulls=True).over(w)
-        )
-    out = filled.where(F.col("_side") == 1)
-
+    # same window spec for every source -> ONE Window physical node
+    filled = u.withColumns(
+        {f"_f{i}": F.last(f"_r{i}", ignorenulls=True).over(w) for i in range(len(names))}
+    )
     _sec = epoch_sec_fn(u, on)
-    lts = _sec(F.col(on))
-    final_cols = list(spine_cols)
-    for n in names:
-        tol = tolerance_seconds.get(n)
-        keep = F.col(f"_f_{n}").isNotNull()
-        if tol is not None:
-            keep = keep & ((lts - _sec(F.col(f"_f_{n}._rts"))) <= F.lit(tol))
-        for c in payload_cols[n]:
-            out = out.withColumn(
-                f"{c}_{n}", F.when(keep, F.col(f"_f_{n}.{c}"))
-            )
-            final_cols.append(f"{c}_{n}")
-        out = out.withColumn(f"{on}_{n}", F.when(keep, F.col(f"_f_{n}._rts")))
-        final_cols.append(f"{on}_{n}")
-    return out.select(*final_cols)
+    picks = [
+        (f"_f{i}", payload_cols[n], f"_{n}", _gap_ok(_sec, on, f"_f{i}", tolerance_seconds.get(n)))
+        for i, n in enumerate(names)
+    ]
+    return _gated_output(filled, spine_cols, on, picks)

@@ -323,90 +323,68 @@ def embedding_neardup_exact(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "numpy",  # "numpy" (Arrow-batched matmul) | "jvm"
     max_driver_rows: int = 200_000,
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (broadcast self-join verify).
 
-    The exact primitive: all (a, b) with a < b and cosine ≥ threshold. At
-    scale this is the *verify* stage run on candidate pairs only; as a
-    standalone query it broadcasts the smaller projection (id, vec) and
-    scans the corpus once. Use :func:`embedding_neardup_pairs` (LSH
-    blocking) when the corpus is too large for the O(n²) verify.
-
-    ``method="numpy"``: each corpus partition multiplies its normalized
-    block against the broadcast normalized matrix with one BLAS matmul
-    inside ``mapInPandas``. The broadcast matrix is built on the driver,
-    so this path is gated by ``max_driver_rows`` — it is a small-corpus
-    VERIFY primitive, not the scale path. For the distributed exact
-    all-pairs plan (no driver materialization at any size) use
-    :func:`embedding_neardup_blocked`. ``method="jvm"`` keeps everything
-    in Catalyst expressions (no Python) for environments where that
-    matters more than speed.
+    The exact primitive: all (a, b) with a < b and cosine ≥ threshold.
+    Each corpus partition multiplies its normalized block against the
+    broadcast normalized matrix with one BLAS matmul inside
+    ``mapInPandas``. The broadcast matrix is built on the driver, so this
+    path is gated by ``max_driver_rows`` — it is a small-corpus VERIFY
+    primitive and the oracle :func:`embedding_neardup_blocked` is tested
+    against, not the scale path. For the distributed exact all-pairs plan
+    (no driver materialization at any size) use
+    :func:`embedding_neardup_blocked`; for corpora too large for the
+    O(n²) verify, :func:`embedding_neardup_pairs` (LSH blocking).
     """
-    if method == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
-        n = df.count()
-        assert n <= max_driver_rows, (
-            f"embedding_neardup_exact(method='numpy') materializes the corpus "
-            f"on the driver: {n} rows > max_driver_rows={max_driver_rows}. "
-            f"Use embedding_neardup_blocked (distributed block matmul) instead."
-        )
-        id_dt = df.schema[id_col].dataType.simpleString()
-        rows = df.select(id_col, F.col(vec_col).cast("array<double>")).collect()
-        # id dtype follows the input schema (object for strings/decimals)
-        ids = np.array([r[0] for r in rows])
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = np.inf  # zero vectors match nothing
-        unit = mat / norms
-        spark = df.sparkSession
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_unit = spark.sparkContext.broadcast(unit)
-        thr = float(threshold)
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            all_ids, all_unit = b_ids.value, b_unit.value
-            for pdf in batches:
-                block = np.array(list(pdf["_v"]), dtype=np.float64)
-                bn = np.linalg.norm(block, axis=1, keepdims=True)
-                bn[bn == 0] = np.inf
-                block = block / bn
-                sims = block @ all_unit.T  # (batch, corpus)
-                bi, ci = np.nonzero(sims >= thr)
-                lid = pdf["_id"].to_numpy()[bi]
-                rid = all_ids[ci]
-                keep = lid < rid
-                yield pd.DataFrame(
-                    {
-                        "id_a": lid[keep],
-                        "id_b": rid[keep],
-                        "cos_sim": np.round(sims[bi, ci][keep], 6),
-                    }
-                )
-
-        return df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).mapInPandas(kernel, schema=f"id_a {id_dt}, id_b {id_dt}, cos_sim double")
-    # pre-normalize ONCE per row: higher-order-function expressions are
-    # interpreted (not codegen'd), so recomputing both norms per PAIR
-    # multiplies the dominant cost by ~3x on the O(n^2) join
-    v = F.col(vec_col).cast("array<double>")
-    norm = l2norm(v)
-    unit = F.when(norm != 0.0, F.transform(v, lambda x: x / norm))
-    a = df.select(F.col(id_col).alias("id_a"), unit.alias("_ua"))
-    b = df.select(F.col(id_col).alias("id_b"), unit.alias("_ub"))
-    return (
-        a.crossJoin(maybe_broadcast(b))
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", dot(F.col("_ua"), F.col("_ub")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
+    n = df.count()
+    assert n <= max_driver_rows, (
+        f"embedding_neardup_exact materializes the corpus "
+        f"on the driver: {n} rows > max_driver_rows={max_driver_rows}. "
+        f"Use embedding_neardup_blocked (distributed block matmul) instead."
     )
+    id_dt = df.schema[id_col].dataType.simpleString()
+    rows = df.select(id_col, F.col(vec_col).cast("array<double>")).collect()
+    # id dtype follows the input schema (object for strings/decimals)
+    ids = np.array([r[0] for r in rows])
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = np.inf  # zero vectors match nothing
+    unit = mat / norms
+    spark = df.sparkSession
+    b_ids = spark.sparkContext.broadcast(ids)
+    b_unit = spark.sparkContext.broadcast(unit)
+    thr = float(threshold)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        all_ids, all_unit = b_ids.value, b_unit.value
+        for pdf in batches:
+            block = np.array(list(pdf["_v"]), dtype=np.float64)
+            bn = np.linalg.norm(block, axis=1, keepdims=True)
+            bn[bn == 0] = np.inf
+            block = block / bn
+            sims = block @ all_unit.T  # (batch, corpus)
+            bi, ci = np.nonzero(sims >= thr)
+            lid = pdf["_id"].to_numpy()[bi]
+            rid = all_ids[ci]
+            keep = lid < rid
+            yield pd.DataFrame(
+                {
+                    "id_a": lid[keep],
+                    "id_b": rid[keep],
+                    "cos_sim": np.round(sims[bi, ci][keep], 6),
+                }
+            )
+
+    return df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).cast("array<double>").alias("_v"),
+    ).mapInPandas(kernel, schema=f"id_a {id_dt}, id_b {id_dt}, cos_sim double")
 
 
 def embedding_neardup_blocked(

@@ -253,7 +253,9 @@ def adaptive_salt_above(
 
     Returns None on an empty input (nothing to salt). The profile costs
     one extra job; at true scale run it once and pass the number to
-    every downstream invocation (jobs/run_turn_features.py does).
+    every downstream invocation as ``turn_features(salt_above=...)``.
+    ``jobs/run_turn_features.py`` passes no threshold today, so every
+    conversation there takes the plain path.
     """
     thr, _ = _adaptive_profile(transcripts, chunk_rows, straggler_factor, key)
     return thr

@@ -1,15 +1,16 @@
-"""Table layer: Iceberg-first with a parquet fallback (sandbox-safe).
+"""Table layer: clustered parquet and catalog-bucketed tables.
 
 The reference's "table" is a directory of per-entity .npy files keyed by
 filename stem (``extract_collected_local.py:55-58``); ours is one table
 partitioned so the engine's hot path — windows and as-of joins keyed by
 (conv_id, ts) — reads co-located, pre-sorted runs:
 
-- Iceberg (production): bucketed by conv_id, sorted within files by
-  (conv_id, turn_idx); snapshots give the resume story.
-- Parquet (sandbox fallback, Iceberg runtime jar absent): directory layout
-  with ``repartition(conv_id)`` + ``sortWithinPartitions`` so scans still
-  deliver clustered runs.
+- :func:`write_table`: parquet directory layout with
+  ``repartition(conv_id)`` + ``sortWithinPartitions`` so scans deliver
+  clustered runs (Iceberg's sorted write, without the Iceberg runtime).
+- :func:`write_bucketed_table`: Spark-native bucketing by conv_id
+  (Iceberg's ``bucket(N, key)`` transform), so same-key joins and
+  aggregates need no exchange.
 
 Schema is enforced (StructType), never inferred — the opposite of the
 reference's inferred-at-load convention (``sampling_data.py:183-184``),
@@ -18,8 +19,6 @@ hundredth downstream job.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,21 +34,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
     ]
 )
-
-DRIVER_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
 
 def write_table(
     df: DataFrame,
@@ -115,18 +99,6 @@ def read_bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
     """Read a bucketed table BY NAME — reading the parquet path directly
     would drop the bucket metadata and reintroduce the shuffle."""
     return spark.table(table_name)
-
-
-def load_driver_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver-generated parquet tables and register temp views."""
-    out = {}
-    for name in DRIVER_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            df = spark.read.parquet(p)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
 
 
 def validate_transcripts(df: DataFrame) -> DataFrame:

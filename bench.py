@@ -59,32 +59,39 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
 
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
+    def lane(name: str, build, warmup: bool = False) -> float:
+        """Time ``force(build())``: best of 2, plus a third sample when the
+        two disagree by more than 1.4x (noisy-neighbor guard: the slow one
+        was contended). Records min and median; returns the min."""
+        if warmup:
+            force(build())
+
+        def timed() -> float:
+            t0 = time.perf_counter()
+            force(build())
+            return time.perf_counter() - t0
+
+        runs = [timed(), timed()]
+        if max(runs) > 1.4 * min(runs):
+            runs.append(timed())
+        s = sorted(runs)
         n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+        med = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+        timings[name] = round(s[0], 3)
+        medians[name] = round(med, 3)
+        return s[0]
 
     # headline: flagship transcripts pipeline throughput.
     # Steady-state measurement: one untimed warmup run (codegen/JIT + cache
-    # build), then best-of-2 timed runs — at bench scale, first-run JVM
-    # warmup would otherwise dominate what is a per-partition-amortized
-    # cost at 100 TB.
+    # build), then the timed runs — at bench scale, first-run JVM warmup
+    # would otherwise dominate what is a per-partition-amortized cost at
+    # 100 TB.
     t = generate_transcripts(spark, n_convs=N_CONVS_BENCH)
     t = t.persist()
     n_turns = t.count()  # materialize input outside the timed window
-    force(turn_features(t))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):  # noisy-neighbor guard (see below)
-        t0 = time.perf_counter()
-        force(turn_features(t))
-        runs.append(time.perf_counter() - t0)
-    flagship_sec = min(runs)
-    timings["transcripts_turn_features"] = round(flagship_sec, 3)
-    medians["transcripts_turn_features"] = round(_median(runs), 3)
+    flagship_sec = lane(
+        "transcripts_turn_features", lambda: turn_features(t), warmup=True
+    )
     turns_per_sec = n_turns / flagship_sec
 
     # straggler-bound lane: mega-conversations (2000 turns each here;
@@ -93,53 +100,27 @@ def main() -> None:
     # machinery overhead; the point it evidences is that the flagship has
     # a bounded-task-size mode whose output is frame-identical
     # (tests/test_golden.py pins equality).
-    force(turn_features(t, salt_above=1000, chunk_rows=512))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above=1000, chunk_rows=512))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above=1000, chunk_rows=512))
-        runs.append(time.perf_counter() - t0)
-    timings["transcripts_turn_features_salted"] = round(min(runs), 3)
-    medians["transcripts_turn_features_salted"] = round(_median(runs), 3)
+    lane(
+        "transcripts_turn_features_salted",
+        lambda: turn_features(t, salt_above=1000, chunk_rows=512),
+        warmup=True,
+    )
 
     # adaptive routing lane: salt_above="auto" derives the threshold from
     # the key histogram (one profile job). On this mild-skew table the
     # derived threshold exceeds every conversation, so the cost target is
     # plain-path + profile — the VERDICT r3 bar: ≤ 1.5× plain. (The
     # static-threshold lane above keeps measuring the salted MACHINERY.)
-    force(turn_features(t, salt_above="auto"))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above="auto"))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above="auto"))
-        runs.append(time.perf_counter() - t0)
-    timings["transcripts_turn_features_auto"] = round(min(runs), 3)
-    medians["transcripts_turn_features_auto"] = round(_median(runs), 3)
+    lane(
+        "transcripts_turn_features_auto",
+        lambda: turn_features(t, salt_above="auto"),
+        warmup=True,
+    )
     t.unpersist()
 
     qs = entry_mod.queries()
     for name in (BENCH_QUERIES or sorted(qs)):
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            force(qs[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        # noisy-neighbor guard: when the two runs disagree badly the slow
-        # one was contended — one more sample, keep the best
-        if max(runs) > 1.4 * min(runs):
-            t0 = time.perf_counter()
-            force(qs[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(min(runs), 3)
-        medians[name] = round(_median(runs), 3)
+        lane(name, lambda: qs[name](spark, sf_dir))
         # operators that persist() intermediates (minhash shingles,
         # weighted-percentile cumsum) build a FRESH cache per invocation;
         # drop them between queries so cache pressure from earlier

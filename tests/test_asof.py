@@ -1,4 +1,4 @@
-"""As-of join: pd.merge_asof oracle, cogroup-vs-union equivalence,
+"""As-of join: pd.merge_asof oracle, cogroup-oracle-vs-union equivalence,
 tolerance/strict modes, and the ZERO TEMPORAL LEAKAGE property
 (north_rule): no output may read right rows with ts greater than the
 left timestamp."""
@@ -13,14 +13,13 @@ from acoustic_feature_extractor_spark.operators.asof import (
     align_sources,
     asof_join,
     asof_join_cogroup,
-    asof_join_salted,
     asof_join_salted_jvm,
     resample_grid,
 )
 
-# both salted engines must be indistinguishable from the unsalted join
-SALTED_IMPLS = [asof_join_salted, asof_join_salted_jvm]
-SALTED_IDS = ["arrow", "jvm"]
+# the salted engine must be indistinguishable from the unsalted join
+SALTED_IMPLS = [asof_join_salted_jvm]
+SALTED_IDS = ["jvm"]
 
 
 def _two_sides(spark, n_left=60, n_right=40, seed=3):
@@ -219,9 +218,8 @@ def test_align_sources_tolerance_rejects(spark):
 
 @pytest.mark.parametrize("salted_impl", SALTED_IMPLS, ids=SALTED_IDS)
 def test_salted_asof_equals_unsalted(spark, salted_impl):
-    """Both salted engines (Arrow merge_asof and the pure-JVM union-trick
-    + chunk-carry) must be frame-for-frame identical to the plain as-of
-    join — carry rows hand the true predecessor across every salt
+    """The salted engine (union trick + chunk carry) must be
+    frame-for-frame identical to the plain as-of join — carry rows hand the true predecessor across every salt
     boundary. Small chunk_seconds forces many chunks per entity. The
     right payload includes NULLS and the comparison also covers the
     matched row's own timestamp, so a carry that skipped a null payload
@@ -541,6 +539,68 @@ def test_point_in_time_enrich_matches_sequential_asof(spark, tol, allow_exact):
     g, c = _collect_sorted(got), _collect_sorted(chained)
     assert list(g.columns) == list(c.columns)
     pd.testing.assert_frame_equal(g, c, check_dtype=False)
+
+
+@pytest.mark.parametrize(
+    "tol,allow_exact",
+    [({"alpha": 300.0}, True), ({"beta": 300.0}, False)],
+    ids=["tolerance", "strict"],
+)
+def test_point_in_time_enrich_matches_merge_asof(spark, tol, allow_exact):
+    """K=2 sources against pandas merge_asof itself — code independent of
+    the union builder point_in_time_enrich shares with asof_join — with a
+    per-source tolerance and in strict mode. A third of each source's rows
+    sit exactly on spine timestamps, so strict mode has ties to exclude."""
+    from acoustic_feature_extractor_spark.operators.asof import point_in_time_enrich
+
+    rng = np.random.RandomState(29)
+    base = pd.Timestamp("2024-01-01")
+    spine_rows, src = [], {"alpha": [], "beta": []}
+    for key in ["a", "b", "c"]:
+        sts = np.sort(rng.choice(5_000, 30, replace=False))
+        spine_rows += [
+            (key, base + pd.Timedelta(seconds=int(t)), float(i)) for i, t in enumerate(sts)
+        ]
+        for n in src:
+            ts = np.union1d(
+                rng.choice(sts, 8, replace=False), rng.choice(5_000, 16, replace=False)
+            )
+            src[n] += [
+                (key, base + pd.Timedelta(seconds=int(t)), float(rng.rand()), int(rng.randint(0, 5)))
+                for t in ts
+            ]
+    spine_pdf = pd.DataFrame(spine_rows, columns=["conv_id", "ts", "sv"])
+    got = point_in_time_enrich(
+        spark.createDataFrame(spine_pdf),
+        {
+            n: spark.createDataFrame(pd.DataFrame(rows, columns=["conv_id", "ts", "x", "k"]))
+            for n, rows in src.items()
+        },
+        tolerance_seconds=tol,
+        allow_exact_matches=allow_exact,
+    ).toPandas()
+
+    exp = spine_pdf.sort_values("ts")
+    for n, rows in src.items():
+        rp = pd.DataFrame(rows, columns=["conv_id", "ts", f"x_{n}", f"k_{n}"])
+        rp[f"ts_{n}"] = rp["ts"]
+        t = tol.get(n)
+        exp = pd.merge_asof(
+            exp,
+            rp.sort_values("ts"),
+            on="ts",
+            by="conv_id",
+            tolerance=pd.Timedelta(seconds=t) if t else None,
+            allow_exact_matches=allow_exact,
+        )
+    assert list(got.columns) == list(exp.columns)
+    for n in src:  # the fixture does exercise both gates
+        assert exp[f"ts_{n}"].notna().any() and exp[f"ts_{n}"].isna().any()
+    pd.testing.assert_frame_equal(
+        got.sort_values(["conv_id", "ts"]).reset_index(drop=True),
+        exp.sort_values(["conv_id", "ts"]).reset_index(drop=True),
+        check_dtype=False,
+    )
 
 
 def test_point_in_time_enrich_zero_leakage(spark):

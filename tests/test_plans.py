@@ -145,7 +145,7 @@ def test_no_unconditional_broadcast_of_fact_scaled_relations():
 def test_salted_asof_jvm_is_pure_jvm(spark, entry_mod):
     """The default salted as-of engine must contain no Python evaluation
     node — the whole point of composing the union trick with the chunk
-    carry (the Arrow merge_asof variant exists separately)."""
+    carry."""
     plan = _plan(entry_mod.queries()["asof_salted"](spark, SF))
     assert "ArrowEvalPython" not in plan
     assert "FlatMapCoGroupsInPandas" not in plan
